@@ -14,8 +14,8 @@ the engine's public module state, between operations: nothing in
 * A ``StreamingQueryListener`` that sees every micro-batch of every
   drain.
 * ``/proc/<jvm pid>/io`` read/write character counts.
-* ``functions.memo`` lookups and entries, ``functions.cache`` tracked
-  stage persists.
+* ``functions.memo`` lookups and entries, and the stage persists
+  ``functions.cache`` tracked during the operation.
 """
 
 from __future__ import annotations
@@ -234,10 +234,10 @@ class Tracer:
             "io": read_proc_io(self.jvm_pid),
             "touches": self._memo.touches(),
             "memo_keys": set(self._memo._CACHE),
+            # the objects themselves, not their ids: a released one could
+            # hand its id to a new persist
+            "tracked": list(self._cache._TRACKED),
         }
-
-    def stage_persists(self) -> int:
-        return len(self._cache._TRACKED)
 
     def end(self, snap: dict, op: dict) -> None:
         """Attribute everything since ``begin`` to ``op`` (a dict with
@@ -253,6 +253,9 @@ class Tracer:
         builds = len(set(self._memo._CACHE) - snap["memo_keys"])
         m["memo.lookups"] += lookups
         m["memo.builds"] += builds
+        m["cache.stage_persists"] += sum(
+            not any(df is old for old in snap["tracked"]) for df in self._cache._TRACKED
+        )
         m["registry.build_s"] += op["build_s"]
         m["collect.to_pandas_s"] += op["collect_s"]
         module = op["module"] if op["module"] in self.modules else "other"

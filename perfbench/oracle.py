@@ -4,8 +4,8 @@ The reference for each query is its registered DuckDB oracle SQL run
 over the same fixture files, normalized with ``normalize`` from the
 repository's ``tests/conftest.py`` (the exact rule the differential
 tests use) and hashed.  Fingerprints are cached on disk keyed on
-(fixture dir, hash of the oracle SQL, duckdb version), so only the
-first run in a checkout pays for the oracle.
+(fixture content, hash of the oracle SQL, duckdb version), so only
+the first run in a checkout pays for the oracle.
 
 A Spark result is checked with the full normalization the first time a
 given result is seen; later results of the same query are matched by
@@ -16,6 +16,8 @@ every operation.
 
 from __future__ import annotations
 
+import functools
+import glob
 import hashlib
 import importlib.util
 import json
@@ -41,9 +43,20 @@ def digest(columns, rows) -> str:
     return hashlib.sha256(repr((sorted(columns), rows)).encode()).hexdigest()
 
 
+@functools.lru_cache
+def fixture_digest(fixture_dir: str) -> str:
+    """Hash of the names and bytes of a fixture directory's tables."""
+    h = hashlib.sha256()
+    for path in sorted(glob.glob(os.path.join(fixture_dir, "*.parquet"))):
+        h.update(os.path.basename(path).encode())
+        with open(path, "rb") as f:
+            h.update(f.read())
+    return h.hexdigest()
+
+
 def cache_path(cache_dir: str, fixture_dir: str, sql: str) -> str:
     key = "|".join([
-        os.path.basename(fixture_dir.rstrip("/")),
+        fixture_digest(fixture_dir),
         hashlib.sha256(sql.encode()).hexdigest(),
         duckdb.__version__,
     ])

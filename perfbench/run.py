@@ -1,21 +1,19 @@
 """One benchmark run of the engine through its public surface.
 
-    python3 perfbench/run.py --workload cluster_ops --seed 1 --seconds 15 --trace 0
+    python3 perfbench/run.py --workload cluster_ops --seed 1 --seconds 12 --trace 0
 
 Drives ``session.get_spark()`` -> ``catalog.load_model()`` ->
 ``__spark_entry__.queries()[q](spark, fixture_dir).toPandas()`` as a
-closed loop with one client on ``local[nproc]``, over fixture tables
-generated in the checkout (``fixtures.py``).  The benchmark adds no
-session configuration, caching or cache release of its own, so the
-timed configuration is the one the tests gate.
+closed loop with one client on ``local[nproc]``, over the sf0.01 test
+fixtures committed under ``data/``.  The benchmark adds no session
+configuration, caching or cache release of its own, so the timed
+configuration is the one the tests gate.
 
 Set-up (``setup_s``) runs from the start of ``get_spark()`` to the end
-of the untimed warm-up passes over the workload's mix, which build the
-memoized artifacts and let the JIT settle.  The timed loop then runs
-whole cycles over the mix, each in an order drawn from ``--seed``; the
-number of cycles is ``--seconds`` over the workload's nominal cycle
-time, so every run of a workload does the same work.  Timed figures are
-scaled to a reference host speed (``HOST_PROBE_REF_S``).  Every timed
+of the untimed warm-up pass over the workload's mix, which builds the
+memoized artifacts and compiles each query's plans once.  The timed
+loop then runs whole cycles over the mix, each in an order drawn from
+``--seed``, as many as ``--seconds`` over ``CYCLE_S``.  Every timed
 result is checked against the DuckDB oracle (``oracle.py``); failures
 and mismatches count in ``failed``.
 
@@ -34,9 +32,11 @@ import json
 import math
 import os
 import random
+import shutil
 import statistics
 import subprocess
 import sys
+import tempfile
 import time
 import traceback
 
@@ -44,19 +44,21 @@ HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
 sys.path.insert(0, HERE)
 
-from workloads import DATA_SEED, MIN_OPS, MODULES, SF, WARMUP_PASSES, WORKLOADS  # noqa: E402
+from workloads import CYCLE_S, FIXTURE_DIR, MIN_OPS, MODULES, WORKLOADS  # noqa: E402
 
-#: Host-speed normalization.  On a shared host the CPU speed drifts by
-#: 10-30 % over minutes, which moved every timed metric together between
-#: runs.  A fixed loop timed before and after each operation tracks that
-#: drift (on a shared 4-core VM, a 0.8 s loop and a 35 ms probe run
-#: beside it correlated at 0.85), so each operation's wall time is
-#: scaled by ``HOST_PROBE_REF_S`` over the mean of its two probes: the
-#: latency it would have on a host where the probe takes exactly that
-#: long (on that VM it took 0.043-0.082 s, median 0.060 s).  The unscaled
-#: figures are kept in the run report under ``wall_clock``.
+#: Host-speed diagnostic.  The capacity a shared 4-core VM gives a run
+#: changes by 30-200 % over minutes (the hypervisor reported up to a
+#: quarter of CPU time stolen), and every query of a run moves with it.
+#: A fixed CPython loop run at once in one forked process per CPU, timed
+#: before each operation outside its timed region, follows that
+#: capacity.  The run report and the stderr summary give the timed
+#: figures also scaled to a host on which it takes ``HOST_PROBE_REF_S``
+#: (by the run's median probe), to tell host drift from a change in the
+#: program.  The result line carries the wall-clock figures only: work
+#: the program left running between operations would slow the probe and
+#: flatter a scaled figure.
 HOST_PROBE_ITERS = 600_000
-HOST_PROBE_REF_S = 0.05
+HOST_PROBE_REF_S = 0.1
 
 #: End-to-end metrics on the ``--trace 0`` result line (BENCHMARK.json
 #: ``end_to_end``), with their units.
@@ -79,10 +81,9 @@ def parse_args(argv):
     p.add_argument("--seed", type=int, required=True)
     p.add_argument("--seconds", type=float, required=True)
     p.add_argument("--trace", type=int, choices=(0, 1), default=0)
-    p.add_argument("--sf", type=float, default=SF, help="fixture scale factor")
     p.add_argument(
         "--state-dir", default=os.path.join(ROOT, ".perfbench"),
-        help="fixtures, oracle cache, spans and run reports",
+        help="oracle cache, spans and run reports",
     )
     return p.parse_args(argv)
 
@@ -99,12 +100,20 @@ def tail_percentile(samples: list[float]) -> tuple[int, float]:
 
 
 def host_probe() -> float:
-    """Wall seconds of a fixed CPython loop: a yardstick of host speed,
-    taken between operations."""
+    """Wall seconds of a fixed CPython loop run at once in one forked
+    process per CPU: a yardstick of the host's parallel capacity."""
     t = time.perf_counter()
-    s = 0
-    for i in range(HOST_PROBE_ITERS):
-        s += i * i
+    pids = []
+    for _ in range(cpu_count()):
+        pid = os.fork()
+        if pid == 0:
+            s = 0
+            for i in range(HOST_PROBE_ITERS):
+                s += i * i
+            os._exit(0)
+        pids.append(pid)
+    for pid in pids:
+        os.waitpid(pid, 0)
     return time.perf_counter() - t
 
 
@@ -122,18 +131,32 @@ def run(args, log) -> dict:
         p for p in (ROOT, os.environ.get("PYTHONPATH", "")) if p
     )
     os.environ["SPARK_GRAFT_CPUS"] = str(cpu_count())
+    # The session's temporary files (Spark's scratch, the engine's
+    # tempfile directories, native libraries the JVM unpacks) go to a
+    # directory of this run inside the state directory.
+    tmp_root = os.path.join(args.state_dir, "tmp")
+    os.makedirs(tmp_root, exist_ok=True)
+    tmp = tempfile.mkdtemp(dir=tmp_root)
+    os.environ["TMPDIR"] = os.environ["SPARK_LOCAL_DIRS"] = tmp
+    os.environ["JAVA_TOOL_OPTIONS"] = " ".join(
+        o for o in (os.environ.get("JAVA_TOOL_OPTIONS"), f"-Djava.io.tmpdir={tmp}") if o
+    )
+    tempfile.tempdir = None
+    try:
+        return measure(args, log)
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
 
+
+def measure(args, log) -> dict:
     import duckdb
-    import fixtures
     import oracle
     import pyspark
     from layers import Tracer, read_hwm_kb
 
     workload = WORKLOADS[args.workload]
     names = workload["queries"]
-    fixture_dir = fixtures.ensure_fixture(
-        os.path.join(args.state_dir, "fixtures"), args.sf, DATA_SEED
-    )
+    fixture_dir = FIXTURE_DIR
 
     import __spark_entry__ as entry
     from hbase_tools_spark.catalog import load_model
@@ -161,14 +184,13 @@ def run(args, log) -> dict:
         t2 = time.perf_counter()
         queries = entry.queries()
         warmup = {}
-        for _ in range(WARMUP_PASSES):
-            for q in names:
-                w0 = time.perf_counter()
-                try:
-                    queries[q](spark, fixture_dir).toPandas()
-                except Exception:  # counted when the timed loop hits it again
-                    log(f"warm-up {q} raised:\n{traceback.format_exc()}")
-                warmup.setdefault(q, []).append(time.perf_counter() - w0)
+        for q in names:
+            w0 = time.perf_counter()
+            try:
+                queries[q](spark, fixture_dir).toPandas()
+            except Exception:  # counted when the timed loop hits it again
+                log(f"warm-up {q} raised:\n{traceback.format_exc()}")
+            warmup[q] = time.perf_counter() - w0
         t3 = time.perf_counter()
         setup = {
             "session.get_spark_s": t1 - t0,
@@ -186,15 +208,17 @@ def run(args, log) -> dict:
             spans = tracer.finish_spans()
     finally:
         stop(spark)
+    host_s = statistics.median(o["probe_s"] for o in ops)
+    scale = HOST_PROBE_REF_S / host_s
 
     failed = [o for o in ops if not o["ok"]]
+    wall = latency_metrics(ops)
     e2e = {
         "setup_s": t3 - t0,
-        **latency_metrics([o["ref_s"] for o in ops]),
+        **wall,
         "peak_rss_mb": peak_kb / 1024.0,
         "failed_frac": len(failed) / len(ops),
     }
-    pct = tail_percentile([o["ref_s"] for o in ops])[0]
 
     report = {
         "workload": args.workload,
@@ -202,17 +226,22 @@ def run(args, log) -> dict:
         "trace": args.trace,
         "meta": {
             "nproc": cpu_count(),
-            "sf": args.sf,
-            "fixture": os.path.basename(fixture_dir),
+            "fixture": os.path.relpath(fixture_dir, ROOT),
             "pyspark": pyspark.__version__,
             "duckdb": duckdb.__version__,
             "java": java_version,
             "cycles": max(o["cycle"] for o in ops) + 1,
             "ops": len(ops),
-            "tail_percentile": pct,
+            "tail_percentile": tail_percentile(timed_samples(ops))[0],
+            "tail_samples": len(timed_samples(ops)),
         },
         "end_to_end": e2e,
-        "wall_clock": latency_metrics([o["wall_s"] for o in ops]),
+        "host_probe_s": host_s,
+        "host_scaled": {
+            "op_p50_s": wall["op_p50_s"] * scale,
+            "op_tail_s": wall["op_tail_s"] * scale,
+            "ops_per_s": wall["ops_per_s"] / scale,
+        },
         "failed_by_query": {
             q: sum(1 for o in failed if o["query"] == q)
             for q in sorted({o["query"] for o in failed})
@@ -220,10 +249,13 @@ def run(args, log) -> dict:
         "setup_phases_s": setup,
         "warmup_query_s": warmup,
         "query_p50_s": {
-            q: statistics.median(o["ref_s"] for o in ops if o["query"] == q) for q in names
+            q: statistics.median(o["wall_s"] for o in ops if o["query"] == q) for q in names
         },
         "per_layer": layers,
-        "ops": [{k: o[k] for k in ("query", "cycle", "wall_s", "ref_s", "ok")} for o in ops],
+        "ops": [
+            {k: o[k] for k in ("query", "cycle", "wall_s", "probe_s", "ok")}
+            for o in ops
+        ],
         "attempted": len(ops),
         "failed": len(failed),
     }
@@ -245,10 +277,7 @@ def run(args, log) -> dict:
 def timed_loop(args, spark, queries, names, fixture_dir, checker, tracer, registry, log):
     """Whole cycles over the mix in seed-drawn orders; one record per
     operation."""
-    workload = WORKLOADS[args.workload]
-    cycles = max(
-        math.ceil(MIN_OPS / len(names)), round(args.seconds / workload["nominal_cycle_s"])
-    )
+    cycles = max(math.ceil(MIN_OPS / len(names)), round(args.seconds / CYCLE_S))
     rng = random.Random(args.seed)
     ops = []
     for cycle in range(cycles):
@@ -260,11 +289,9 @@ def timed_loop(args, spark, queries, names, fixture_dir, checker, tracer, regist
             start_wall = time.time()
             t0 = time.perf_counter()
             t1 = None
-            persists = 0
             try:
                 df = queries[q](spark, fixture_dir)
                 t1 = time.perf_counter()
-                persists = tracer.stage_persists() if tracer else 0
                 pdf = df.toPandas()
                 ok = True
             except Exception:
@@ -283,20 +310,25 @@ def timed_loop(args, spark, queries, names, fixture_dir, checker, tracer, regist
                 log(f"{q}: result differs from the DuckDB oracle")
                 op["ok"] = False
             if tracer:
-                tracer.metrics["cache.stage_persists"] += persists
                 tracer.end(snap, op)
             ops.append(op)
-    probes = [o["probe_s"] for o in ops] + [host_probe()]
-    for o, before, after in zip(ops, probes, probes[1:]):
-        o["ref_s"] = o["wall_s"] * HOST_PROBE_REF_S / ((before + after) / 2)
     return ops
 
 
-def latency_metrics(lat: list[float]) -> dict[str, float]:
+def timed_samples(ops: list[dict]) -> list[float]:
+    """Latencies of the completed operations, or of all when none
+    completed (the run is then marked incorrect anyway)."""
+    return [o["wall_s"] for o in ops if o["ok"]] or [o["wall_s"] for o in ops]
+
+
+def latency_metrics(ops: list[dict]) -> dict[str, float]:
+    """Wall-clock median and tail latency of the completed operations,
+    and completed operations per second of the timed loop."""
+    lat = timed_samples(ops)
     return {
         "op_p50_s": statistics.median(lat),
         "op_tail_s": tail_percentile(lat)[1],
-        "ops_per_s": len(lat) / sum(lat),
+        "ops_per_s": sum(o["ok"] for o in ops) / sum(o["wall_s"] for o in ops),
     }
 
 
@@ -376,13 +408,18 @@ def summary(report: dict) -> str:
     m = report["meta"]
     lines = [
         f"workload={report['workload']} seed={report['seed']} trace={report['trace']} "
-        f"nproc={m['nproc']} sf={m['sf']} pyspark={m['pyspark']} duckdb={m['duckdb']} "
+        f"nproc={m['nproc']} fixture={m['fixture']} pyspark={m['pyspark']} duckdb={m['duckdb']} "
         f"java={m['java']} cycles={m['cycles']} ops={m['ops']}"
     ]
     notes = {
-        "op_tail_s": f"p{m['tail_percentile']} of {m['ops']} ops",
+        "op_tail_s": f"p{m['tail_percentile']} of {m['tail_samples']} completed ops",
         "failed_frac": ", ".join(f"{q}: {n}" for q, n in report["failed_by_query"].items()),
     }
+    for k, v in report["host_scaled"].items():
+        notes[k] = f"{notes.get(k, '')} (host-scaled {v:.4f})".strip()
+    lines.append(
+        f"  host probe {report['host_probe_s']:.4f} s (reference {HOST_PROBE_REF_S} s)"
+    )
     for k, v in report["end_to_end"].items():
         lines.append(f"  {k:<12} {v:12.4f} {E2E_UNITS[k]:<8} {notes.get(k, '')}")
     return "\n".join(lines)

@@ -1,4 +1,4 @@
-"""Self-tests of the benchmark, on the smallest generated fixtures.
+"""Self-tests of the benchmark.
 
     python3 -m pytest perfbench/test_perfbench.py -q
 
@@ -19,9 +19,8 @@ HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
 sys.path.insert(0, HERE)
 
-from workloads import DATA_SEED, WORKLOADS  # noqa: E402
+from workloads import FIXTURE_DIR, WORKLOADS  # noqa: E402
 
-SMOKE_SF = 0.001
 SPAN_KEYS = {"span_id", "parent_id", "op_id", "name", "start_s", "end_s", "dur_s", "self_s", "attrs"}
 
 with open(os.path.join(ROOT, "BENCHMARK.json")) as _f:
@@ -32,7 +31,7 @@ def run_bench(state_dir, workload: str, trace: int) -> dict:
     proc = subprocess.run(
         [sys.executable, os.path.join(HERE, "run.py"), "--workload", workload,
          "--seed", "0", "--seconds", "1", "--trace", str(trace),
-         "--sf", str(SMOKE_SF), "--state-dir", str(state_dir)],
+         "--state-dir", str(state_dir)],
         cwd=ROOT, stdout=subprocess.PIPE, stderr=subprocess.PIPE, text=True, timeout=600,
     )
     assert proc.returncode == 0, proc.stderr[-4000:]
@@ -90,7 +89,6 @@ def test_smoke(tmp_path, workload):
 
 
 def test_corrupted_reference_counts_as_failure(tmp_path):
-    import fixtures
     import oracle
 
     sys.path.insert(0, ROOT)
@@ -98,9 +96,8 @@ def test_corrupted_reference_counts_as_failure(tmp_path):
 
     workload = "cluster_ops"
     victim = WORKLOADS[workload]["queries"][0]
-    fixture_dir = fixtures.ensure_fixture(str(tmp_path / "fixtures"), SMOKE_SF, DATA_SEED)
     path = oracle.cache_path(
-        str(tmp_path / "oracle"), fixture_dir, __spark_entry__.oracle_sql()[victim]
+        str(tmp_path / "oracle"), FIXTURE_DIR, __spark_entry__.oracle_sql()[victim]
     )
     os.makedirs(os.path.dirname(path))
     with open(path, "w") as f:
@@ -110,3 +107,13 @@ def test_corrupted_reference_counts_as_failure(tmp_path):
     cycles = result["attempted"] // len(WORKLOADS[workload]["queries"])
     assert not result["correct"]
     assert result["failed"] == cycles  # every run of the victim, nothing else
+    assert result["metrics"]["ops_per_s"]["value"] > 0
+
+
+def test_latency_metrics_count_completed_ops_only():
+    import run
+
+    ops = [{"wall_s": 1.0, "ok": True}] * 11 + [{"wall_s": 0.01, "ok": False}] * 5
+    m = run.latency_metrics(ops)
+    assert m["op_p50_s"] == 1.0 and m["op_tail_s"] == 1.0
+    assert m["ops_per_s"] == pytest.approx(11 / 11.05)
