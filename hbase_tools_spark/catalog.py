@@ -16,12 +16,12 @@ one-file change here.
 
 from __future__ import annotations
 
-import os
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .functions.sizing import raise_shuffle_partitions, table_path
 from .model import BASE_TABLES, DERIVED_VIEWS, view_sql
 
 # Fixture parquet stores timestamps as INT64 TIMESTAMP(NANOS), which the
@@ -52,53 +52,6 @@ class Model:
         raise AttributeError(name)
 
 
-#: Post-shuffle partition sizing: parquet bytes expand roughly this
-#: factor into in-memory/shuffle rows (dictionary-encoded strings
-#: decode, derived relations multiply) — conservative so build sides
-#: of shuffled-hash joins stay within task memory at any scale.
-_SHUFFLE_EXPANSION = 6
-_SHUFFLE_TARGET_BYTES = 64 << 20  # ~64 MB per post-shuffle partition
-
-
-def _autosize_shuffle_partitions(spark: SparkSession, sf_dir: str) -> None:
-    """Scale ``spark.sql.shuffle.partitions`` with the DATA, not the
-    bench posture (round-10 verdict task 4: the sf10 certify sweep
-    OOMed at 8 g because partitions — and hence shuffled-hash-join
-    build sides — were a pinned session knob).  Only ever RAISES the
-    setting, and only when estimated post-shuffle bytes demand more
-    partitions than the session already has: local benches that pin a
-    small value for fixture-scale runs (bench.py's 4) keep it, because
-    fixture bytes never reach the threshold; a 100× certify run on the
-    same session config gets ceil(bytes·expansion / 64 MB) instead of
-    an OOM.  ``SPARK_GRAFT_AUTOSHUFFLE=off`` disables.  (The
-    ``shuffle_hash`` hint sites in llm/dedup.py and llm/corpus.py
-    assume exactly this rule: their build sides are bounded per
-    partition BECAUSE partitions scale with input bytes; under AQE the
-    planner may still fall back to sort-merge when a build side
-    estimate exceeds the local-map threshold.)"""
-    if os.environ.get("SPARK_GRAFT_AUTOSHUFFLE", "on") == "off":
-        return
-    try:
-        total = 0
-        for name in BASE_TABLES:
-            path = os.path.join(sf_dir, f"{name}.parquet")
-            if os.path.isfile(path):
-                total += os.path.getsize(path)
-            elif os.path.isdir(path):
-                for root, _, files in os.walk(path):
-                    total += sum(
-                        os.path.getsize(os.path.join(root, f)) for f in files
-                    )
-        by_bytes = -(-total * _SHUFFLE_EXPANSION // _SHUFFLE_TARGET_BYTES)
-        cur = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        if by_bytes > cur:
-            spark.conf.set(
-                "spark.sql.shuffle.partitions", str(min(int(by_bytes), 4096))
-            )
-    except Exception:
-        pass  # sizing is best-effort; the session's setting stands
-
-
 def load_model(spark: SparkSession, sf_dir: str) -> Model:
     """Register base fixture tables + derived relations as temp views.
 
@@ -110,15 +63,15 @@ def load_model(spark: SparkSession, sf_dir: str) -> Model:
     # has this sf_dir registered — also keeps any cached tables warm.
     if spark.conf.get("spark.hbase_tools.model_dir", "") == sf_dir:
         return Model(spark, sf_dir)
-    _autosize_shuffle_partitions(spark, sf_dir)
+    # partitions scale with the fixture's bytes (functions/sizing.py)
+    raise_shuffle_partitions(spark, sf_dir)
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     # Pin UTC so NTZ<->instant conversions and unix_timestamp are
     # deterministic regardless of the host session's timezone (DuckDB
     # treats parquet timestamps as naive-UTC; we must agree).
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     for name in BASE_TABLES:
-        path = os.path.join(sf_dir, f"{name}.parquet")
-        df = spark.read.parquet(path)
+        df = spark.read.parquet(table_path(sf_dir, name))
         for ts_col in _TS_COLUMNS.get(name, []):
             dtype = dict(df.dtypes).get(ts_col)
             if dtype == "bigint":  # ns-encoded (sf0.001/sf0.01 fixtures)
@@ -147,7 +100,7 @@ def assert_view_matches_fixture(m: Model, view: str) -> None:
     vector-side ingest).  Only valid for views load_model registers as
     plain parquet reads (no timestamp normalization), e.g. documents
     and embeddings."""
-    disk = m.spark.read.parquet(os.path.join(m.sf_dir, f"{view}.parquet"))
+    disk = m.spark.read.parquet(table_path(m.sf_dir, view))
     h = lambda df: df._jdf.queryExecution().analyzed().semanticHash()  # noqa: E731
     if h(m.spark.table(view)) != h(disk):
         raise ValueError(

@@ -24,6 +24,8 @@ from functools import reduce
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .sizing import MAX_PARTITIONS
+
 
 def bucket_by_bounds(key: Column, bounds: list) -> Column:
     """Bucket index for explicit ascending split points: number of
@@ -134,7 +136,7 @@ def spread_if_undersplit(df: DataFrame, key_col: str) -> DataFrame:
         by_bytes = -(-size // max(max_pb, 1))  # ceil
     except Exception:  # stats unavailable (e.g. RDD-backed) — slots only
         by_bytes = 0
-    n_target = max(n_slots, min(by_bytes, 4096))
+    n_target = max(n_slots, min(by_bytes, MAX_PARTITIONS))
     if len(df.inputFiles()) < n_target:
         return df.repartition(n_target, key_col)
     return df

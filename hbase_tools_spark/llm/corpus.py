@@ -40,6 +40,7 @@ from pyspark.sql.window import Window
 from ..catalog import Model
 from ..functions.cache import stage_persist
 from ..functions.exprs import fround, fround_sql, register_libm_sql
+from ..functions.sizing import shuffle_hash, table_path
 from ..registry import query
 
 _VOCAB_K = 200   # vocabulary inventory size (top terms by frequency)
@@ -1223,7 +1224,6 @@ def bigram_pmi_top(m: Model) -> DataFrame:
 
 _CARD_SHORT_T = 8  # docs under this many tokens count as "short"
 
-from .dedup import _corpus_shj  # noqa: E402 — size-guarded SHJ hint
 from .pipeline import _REP_DISTINCT_MIN, _REP_TOP_MAX  # noqa: E402 — the
 # ONE pair of Gopher repetition thresholds (docs_repetition_ratio,
 # docs_quality_filter and this card must never drift apart)
@@ -1312,7 +1312,7 @@ def corpus_dataset_card(m: Model) -> DataFrame:
     )
     j = (
         meta.join(per_doc, "doc_id")
-        .join(_corpus_shj(dup, m), "h", "left")
+        .join(shuffle_hash(dup, table_path(m.sf_dir, "documents")), "h", "left")
         .select(
             "source",
             "n_tokens",

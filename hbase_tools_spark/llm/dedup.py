@@ -22,64 +22,13 @@ from pyspark.sql.window import Window
 from ..catalog import Model
 from ..functions.cache import stage_persist
 from ..functions.exprs import fround, fround_sql
+from ..functions.sizing import shuffle_hash, table_path
 from ..registry import query
 
 _SHINGLE = 5          # words per shingle
 _MINHASHES = 16       # minhash functions
 _BANDS = 4            # LSH bands (4 rows each)
 _JACCARD_T = 0.5      # similarity threshold
-
-#: on-disk documents.parquet bytes above which a shingle-scale
-#: shuffle_hash hint is dropped (round 11 / r10 verdict task 4): the
-#: 100x fixture (58 MB docs parquet, ~100x uncompressed expansion into
-#: the exploded shingle relation) made the hinted jaccard self-join's
-#: per-task build map exceed the 8 g default heap's task share; at or
-#: below this threshold the hinted plan is measured faster and safe.
-_SHJ_DOCS_BYTES = 16 << 20
-
-
-def _corpus_shj(df: DataFrame, m: Model) -> DataFrame:
-    """Apply the ``shuffle_hash`` hint only while the fixture's
-    documents relation is small enough that a SHINGLE-SCALE build
-    side's per-task hash map stays within executor task memory;
-    beyond the threshold return the relation unhinted — the planner's
-    sort-merge join SPILLS where the forced SHJ build OOMs ("not
-    enough memory to build hash map" at the 100x fixture, 8 g default
-    heap; guide §3: hash-join only a side that fits).  The guard
-    reads only fixture file sizes (no Spark action)."""
-    import os
-
-    try:
-        path = os.path.join(m.sf_dir, "documents.parquet")
-        if os.path.isfile(path):
-            size = os.path.getsize(path)
-        else:
-            size = sum(
-                os.path.getsize(os.path.join(r, f))
-                for r, _, fs in os.walk(path)
-                for f in fs
-            )
-    except OSError:
-        return df  # unknown size: take the spill-safe plan
-    return df.hint("shuffle_hash") if size <= _SHJ_DOCS_BYTES else df
-
-
-def _dir_shj(df: DataFrame, spark, path: str) -> DataFrame:
-    """``_corpus_shj`` for a build side read from a persisted artifact
-    directory (the novelty-ingest indexes): hint ``shuffle_hash`` only
-    while the directory's bytes stay under the same fixture-scale
-    threshold; above it fall back to the planner's sort-merge, which
-    SPILLS where a forced hash build OOMs.  Sizing goes through the
-    Hadoop FS because ingest indexes may live on hdfs/s3 paths a
-    driver-local stat cannot see (the _fs_exists lesson)."""
-    try:
-        jvm = spark.sparkContext._jvm
-        conf = spark.sparkContext._jsc.hadoopConfiguration()
-        p = jvm.org.apache.hadoop.fs.Path(path)
-        size = p.getFileSystem(conf).getContentSummary(p).getLength()
-    except Exception:
-        return df  # unknown size: take the spill-safe plan
-    return df.hint("shuffle_hash") if size <= _SHJ_DOCS_BYTES else df
 
 # Shared shingle CTE (DuckDB dialect); Spark side built with
 # sequence/transform below — both produce identical shingle strings.
@@ -165,28 +114,22 @@ def ngram_jaccard_pairs(m: Model) -> DataFrame:
     does NOT fire across the two legs (verified on the executed plan),
     so without it the shingle pass runs twice."""
     posts = stage_persist(_shingles_with_size(m))
-    # shuffle-hash hint, SIZE-GUARDED (round 11 / r10 verdict task 4):
     # the posting list is too big to broadcast, and at fixture scale a
     # hashed self-join on the shuffled shingle key beats sort-merge —
-    # but BOTH sides here are the corpus-scale shingle relation, so a
-    # forced SHJ's per-task build map grows with corpus/partitions:
-    # measured at the 100x fixture, the hinted plan dies with
-    # "SparkOutOfMemoryError: not enough memory to build hash map" at
-    # the default 8 g heap, while the unhinted sort-merge fallback
-    # SPILLS and completes (guide §3 — pick SHJ only when a build side
-    # fits task memory).  _corpus_shj drops the hint once the corpus
-    # passes the threshold.
-    a = _corpus_shj(
+    # but BOTH sides are the corpus-scale shingle relation, so the hint
+    # is size-guarded (functions/sizing.py, SHJ_MAX_BYTES).
+    docs = table_path(m.sf_dir, "documents")
+    a = shuffle_hash(
         posts.select(
             F.col("doc_id").alias("doc_a"), F.col("n").alias("na"), "shingle"
         ),
-        m,
+        docs,
     )
-    b = _corpus_shj(
+    b = shuffle_hash(
         posts.select(
             F.col("doc_id").alias("doc_b"), F.col("n").alias("nb"), "shingle"
         ),
-        m,
+        docs,
     )
     common = (
         a.join(b, "shingle")
@@ -1117,7 +1060,9 @@ def docs_window_dedup(m: Model) -> DataFrame:
     n_dup = F.col("n_windows") - F.coalesce(F.col("n_unique"), F.lit(0))
     frac = n_dup * 1.0 / F.col("n_windows")
     return (
-        per_doc.join(_corpus_shj(uniq, m), "doc_id", "left")
+        per_doc.join(
+            shuffle_hash(uniq, table_path(m.sf_dir, "documents")), "doc_id", "left"
+        )
         .select(
             "doc_id",
             F.col("n_windows").cast("bigint").alias("n_windows"),
@@ -1228,7 +1173,8 @@ def docs_line_dedup(m: Model) -> DataFrame:
     )
     n_dup = F.col("n_lines") - F.coalesce(F.col("n_unique"), F.lit(0))
     n_kept = F.coalesce(F.col("n_kept"), F.lit(0))
-    return per_doc.join(_corpus_shj(kept, m), "doc_id", "left").select(
+    kept = shuffle_hash(kept, table_path(m.sf_dir, "documents"))
+    return per_doc.join(kept, "doc_id", "left").select(
         "doc_id",
         F.col("n_lines").cast("bigint").alias("n_lines"),
         n_dup.cast("bigint").alias("n_dup_lines"),
@@ -1295,9 +1241,9 @@ def _dup_window_positions(m: Model):
         .where(F.col("c") >= 2)
         .select("shingle")
     )
-    d = p.join(_corpus_shj(wf, m), "shingle", "left_semi").select(
-        "doc_id", "pos"
-    )
+    d = p.join(
+        shuffle_hash(wf, table_path(m.sf_dir, "documents")), "shingle", "left_semi"
+    ).select("doc_id", "pos")
     return base, d
 
 
@@ -1752,7 +1698,10 @@ def docs_span_removed(m: Model) -> DataFrame:
     from ..functions.partitioning import spread_if_undersplit
 
     joined = spread_if_undersplit(
-        all_docs.join(_corpus_shj(dpos, m), "doc_id", "left"), "doc_id"
+        all_docs.join(
+            shuffle_hash(dpos, table_path(m.sf_dir, "documents")), "doc_id", "left"
+        ),
+        "doc_id",
     )
     return (
         joined
@@ -1849,7 +1798,7 @@ def _novelty_batch_body(spark, index_dir, docs, batch_id, bc) -> dict:
         # corpus-proportional on BOTH sides -> co-keyed join, never a
         # broadcast; novel windows are the anti-join survivors
         novel = bc.join(
-            _dir_shj(seen, spark, index_dir), "shingle", "left_anti"
+            shuffle_hash(seen, index_dir), "shingle", "left_anti"
         )
     else:
         novel = bc
@@ -1951,7 +1900,7 @@ def _novelty_bloom_body(spark, index_dir, batch_id, bc) -> dict:
     if have_index:
         seen = spark.read.parquet(index_dir).select("p")
         probe = pos.join(
-            _dir_shj(seen, spark, index_dir).withColumn("hit", F.lit(1)),
+            shuffle_hash(seen, index_dir).withColumn("hit", F.lit(1)),
             "p", "left",
         )
     else:
@@ -1968,7 +1917,7 @@ def _novelty_bloom_body(spark, index_dir, batch_id, bc) -> dict:
     new_pos = pos.select("p").distinct()
     if have_index:
         new_pos = new_pos.join(
-            _dir_shj(seen, spark, index_dir), "p", "left_anti"
+            shuffle_hash(seen, index_dir), "p", "left_anti"
         )
     (
         new_pos.select("p", F.lit(batch_id).alias("first_batch"))

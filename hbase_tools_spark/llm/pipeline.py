@@ -28,6 +28,7 @@ from pyspark.sql.window import Window
 from ..catalog import Model
 from ..functions.cache import stage_persist
 from ..functions.exprs import fround, fround_sql
+from ..functions.sizing import shuffle_hash, table_path
 from ..registry import query
 
 #: Hash-prefix split boundaries over the md5(doc_id) keyspace: 256
@@ -840,7 +841,7 @@ def corpus_mixture_weights(m: Model) -> DataFrame:
 # embedding per document (vec_id == doc_id, TESTDATA.md), so the two
 # pair relations compose directly.
 
-from .dedup import _JACCARD_PAIRS_SQL, _corpus_shj, ngram_jaccard_pairs  # noqa: E402
+from .dedup import _JACCARD_PAIRS_SQL, ngram_jaccard_pairs  # noqa: E402
 from .similarity import _NEARDUP_PAIRS_SQL, embedding_neardup_pairs  # noqa: E402
 
 
@@ -874,7 +875,8 @@ def semantic_only_dup_pairs(m: Model) -> DataFrame:
     jp = ngram_jaccard_pairs(m).select(
         F.col("doc_a").alias("vec_a"), F.col("doc_b").alias("vec_b")
     )
-    return ep.join(_corpus_shj(jp, m), ["vec_a", "vec_b"], "left_anti")
+    jp = shuffle_hash(jp, table_path(m.sf_dir, "documents"))
+    return ep.join(jp, ["vec_a", "vec_b"], "left_anti")
 
 
 @query(
@@ -920,9 +922,10 @@ def semantic_dedup_survivors(m: Model) -> DataFrame:
         .withColumn("kept_with_dups", F.lit(True))
     )
     d = m.documents.select("doc_id", "lang", "source")
+    docs = table_path(m.sf_dir, "documents")
     return (
-        d.join(_corpus_shj(dropped, m), "doc_id", "left_anti")
-        .join(_corpus_shj(heads, m), "doc_id", "left")
+        d.join(shuffle_hash(dropped, docs), "doc_id", "left_anti")
+        .join(shuffle_hash(heads, docs), "doc_id", "left")
         .select(
             "doc_id", "lang", "source",
             F.coalesce("kept_with_dups", F.lit(False)).alias(

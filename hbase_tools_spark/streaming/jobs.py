@@ -29,12 +29,15 @@ path, exercised in tests where batch boundaries are controlled.
 from __future__ import annotations
 
 import os
+import shutil
+import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import Model
 from ..functions.exprs import dsum, epoch_bigint
+from ..functions.sizing import drain_spills, events_drain_sizing, table_path
 from ..registry import query
 
 _GAP_MIN = 10  # session-window gap (minutes)
@@ -97,24 +100,32 @@ def _stage_links(path: str, stage: str, prefix: str) -> None:
             pass  # another session staged it already
 
 
+def _file_stream(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
+    """``readStream`` over fixture table ``table``.  The file-stream
+    source needs a *directory*, so one holding symlinks to the
+    (read-only) fixture file(s) is staged under the temp directory; in
+    production the feed is already a directory of arriving files.  The
+    schema comes from the batch reader."""
+    path = table_path(sf_dir, table)
+    stage = os.path.join(
+        tempfile.gettempdir(),
+        "hbase_tools_stream",
+        sf_dir.strip("/").replace("/", "_") + "_" + table,
+    )
+    _stage_links(path, stage, table)
+    schema = _SCHEMA_CACHE.get(path)
+    if schema is None:
+        schema = _SCHEMA_CACHE[path] = spark.read.parquet(path).schema
+    return spark.readStream.schema(schema).parquet(stage)
+
+
 def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``readStream`` over the events fixture with the same timestamp
     normalization as the batch catalog (ns-long at small SFs, µs NTZ at
     sf0.1) so streaming and batch plans see identical rows."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    path = os.path.join(sf_dir, "events.parquet")
-    # The file-stream source needs a *directory*; stage one holding
-    # symlinks to the (read-only) fixture file(s).  In production the
-    # feed is already a directory of arriving files.
-    stage = os.path.join(
-        "/tmp", "hbase_tools_stream", sf_dir.strip("/").replace("/", "_")
-    )
-    _stage_links(path, stage, "events")
-    schema = _SCHEMA_CACHE.get(path)
-    if schema is None:
-        schema = _SCHEMA_CACHE[path] = spark.read.parquet(path).schema
-    df = spark.readStream.schema(schema).parquet(stage)
+    df = _file_stream(spark, sf_dir, "events")
     dtype = dict(df.dtypes)["ts"]
     if dtype == "bigint":
         df = df.withColumn("ts", F.timestamp_micros(F.expr("ts DIV 1000")))
@@ -126,75 +137,14 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 def documents_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``readStream`` over the documents fixture — the arriving-corpus
     feed for streaming corpus telemetry (no timestamp column, so no
-    normalization; schema comes from the batch reader like
-    ``events_stream``)."""
-    path = os.path.join(sf_dir, "documents.parquet")
-    stage = os.path.join(
-        "/tmp",
-        "hbase_tools_stream",
-        sf_dir.strip("/").replace("/", "_") + "_documents",
-    )
-    _stage_links(path, stage, "documents")
-    schema = _SCHEMA_CACHE.get(path)
-    if schema is None:
-        schema = _SCHEMA_CACHE[path] = spark.read.parquet(path).schema
-    return spark.readStream.schema(schema).parquet(stage)
+    normalization)."""
+    return _file_stream(spark, sf_dir, "documents")
 
 
 def embeddings_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``readStream`` over the embeddings fixture — the arriving-vector
-    feed for the streaming ANN-index ingest (round 7; same staging as
-    ``documents_stream``)."""
-    path = os.path.join(sf_dir, "embeddings.parquet")
-    stage = os.path.join(
-        "/tmp",
-        "hbase_tools_stream",
-        sf_dir.strip("/").replace("/", "_") + "_embeddings",
-    )
-    _stage_links(path, stage, "embeddings")
-    schema = _SCHEMA_CACHE.get(path)
-    if schema is None:
-        schema = _SCHEMA_CACHE[path] = spark.read.parquet(path).schema
-    return spark.readStream.schema(schema).parquet(stage)
-
-
-_STATE_PART_BYTES = 1 << 20  # ~1 MiB of source per state partition
-
-
-def auto_state_partitions(spark: SparkSession, source_path: str) -> int:
-    """Size the state-partition count of a user-cardinality-linear
-    stateful drain to the stream's source volume: one partition per
-    ~MiB of source, floored at 2 (per-partition state-store lifecycle
-    dominates sub-second fixture drains — the measured knee behind the
-    old fixed 2) and capped at the scheduler parallelism.
-
-    This is the round-9 answer to the round-8 'stream-drain bottleneck'
-    adjudication: the drain's python-stage parallelism IS the state-
-    partition count (frozen into the checkpoint at first run), not the
-    per-executor worker pool — re-measured on the 10x events fixture
-    (19 MiB), the funnel drain falls 30.8 -> 13.2 -> 8.1 -> 5.2 s at
-    2/4/8/16 partitions on local[16], while at constant 2 partitions
-    adding real executors (local-cluster 2x8, 4x4) changes nothing.
-    A production deployment sets this to cluster parallelism before
-    the first run; this helper is the fixture-calibrated stand-in."""
-    size = source_size(spark, source_path)
-    if size == 0:  # missing/remote-unreachable source: the old floor
-        return 2
-    cores = spark.sparkContext.defaultParallelism
-    return max(2, min(cores, int(size // _STATE_PART_BYTES)))
-
-
-def events_state_partitions(m) -> int:
-    """``auto_state_partitions`` over the model's events feed."""
-    return auto_state_partitions(
-        m.spark, os.path.join(m.sf_dir, "events.parquet")
-    )
-
-
-def events_source_bytes(m) -> int:
-    """``source_size`` of the model's events feed — the result-scale
-    hint the user-cardinality drains pass to ``run_to_table``."""
-    return source_size(m.spark, os.path.join(m.sf_dir, "events.parquet"))
+    feed for the streaming ANN-index ingest (round 7)."""
+    return _file_stream(spark, sf_dir, "embeddings")
 
 
 # Progress trail of the most recent drain (instrumentation only):
@@ -205,40 +155,27 @@ def events_source_bytes(m) -> int:
 LAST_DRAIN_PROGRESS: list[dict] = []
 
 
-#: Source-bytes threshold past which a drain's result is sunk to
-#: parquet via foreachBatch instead of the memory sink.  The memory
-#: sink holds the WHOLE result as driver-side JVM objects and serves
-#: it as a parallelized local collection — at the 100x events fixture
-#: the session drain's corpus-scale result OOM'd the default 8 g heap
-#: while (de)serializing those ParallelCollectionRDD partitions back
-#: to executors (measured: java heap OOM in ObjectInputStream under
-#: ParallelCollectionPartition.readObject).  A foreachBatch parquet
-#: sink writes the SAME rows executor-side (the "production
-#: deployments replace the memory sink with a table sink" posture in
-#: the module docstring), so result size never touches driver memory.
-#: Fixture-scale drains (events 2 MB at sf0.1) keep the memory sink —
-#: the bench posture is unchanged.
-_MEM_SINK_MAX_SOURCE_BYTES = 32 << 20
-
-
 def run_to_table(
     stream_df: DataFrame,
     name: str,
     output_mode: str,
     state_partitions: int = 2,
     extra_confs: dict[str, str] | None = None,
-    source_bytes: int = 0,
+    source_bytes: int | None = 0,
 ) -> DataFrame:
     """Drain a streaming DataFrame with AvailableNow into a memory sink
     and return the materialized result as a batch DataFrame.
 
     ``source_bytes`` (callers with corpus-proportional RESULTS pass
-    their feed's size, see ``source_size``): past
-    ``_MEM_SINK_MAX_SOURCE_BYTES`` the drain sinks to parquet via
+    their feed's size, ``None`` when unknown): when
+    ``sizing.drain_spills`` says so, the drain sinks to parquet via
     ``foreachBatch`` — identical rows (complete mode overwrites with
     the batch's full result, append/update append exactly the rows the
     memory sink would have appended), but written executor-side so the
-    result never lives on the driver heap.
+    result never lives on the driver heap.  The spill sink's output
+    directory and the checkpoint are temp directories of the driver;
+    on a multi-host cluster they must be on a filesystem the executors
+    share.
 
     State-partition count is pinned low for these run-to-completion
     fixture drains (each state partition costs a state-store instance
@@ -251,9 +188,6 @@ def run_to_table(
     ``extra_confs`` (e.g. ``ROCKSDB_STATE_CONF``) are applied for the
     drain and restored after — the state-store provider is per-query,
     chosen at first start."""
-    import shutil
-    import tempfile
-
     spark = stream_df.sparkSession
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     prev_nodata = spark.conf.get(
@@ -274,7 +208,7 @@ def run_to_table(
     # run — reusing a committed checkpoint would make availableNow a
     # no-op and leave the memory sink empty.
     ckpt = tempfile.mkdtemp(prefix="hbase_tools_ckpt_", dir=_CKPT_BASE)
-    spill = source_bytes > _MEM_SINK_MAX_SOURCE_BYTES
+    spill = drain_spills(source_bytes)
     out_dir = None
     try:
         if spill:
@@ -320,31 +254,6 @@ def run_to_table(
         except Exception:  # zero-batch drain wrote nothing
             return spark.createDataFrame([], stream_df.schema)
     return spark.table(name)
-
-
-_SOURCE_SIZE_CACHE: dict[str, int] = {}  # path -> bytes; fixtures are
-# immutable for the life of the process (the _SCHEMA_CACHE /
-# functions.memo.sf_cached assumption) — the Hadoop-FS content-summary
-# probe costs several py4j round trips and every user-keyed drain made
-# two of them per build, five builds per bench query.
-
-
-def source_size(spark: SparkSession, source_path: str) -> int:
-    """Bytes of a drain's source feed (Hadoop-FS content summary — the
-    same probe ``auto_state_partitions`` uses); 0 when unknowable.
-    Memoized per path (see _SOURCE_SIZE_CACHE)."""
-    cached = _SOURCE_SIZE_CACHE.get(source_path)
-    if cached is not None:
-        return cached
-    jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    p = jvm.org.apache.hadoop.fs.Path(source_path)
-    try:
-        size = int(p.getFileSystem(conf).getContentSummary(p).getLength())
-    except Exception:
-        size = 0
-    _SOURCE_SIZE_CACHE[source_path] = size
-    return size
 
 
 # ---------------------------------------------------------------------------
@@ -469,19 +378,15 @@ def stream_session_stats(m: Model) -> DataFrame:
             "total_value",
         )
     )
-    # 4 state partitions: session state keys on user_id (high
-    # cardinality) — the one drain where state work outweighs per-
-    # partition store lifecycle (measured 1.2 s vs 1.4 s at 2 parts).
     # session state keys on user_id (high cardinality) — the one
     # windowed drain where state work outweighs per-partition store
-    # lifecycle; sized to the events volume (>= 4 measured best at
-    # sf0.1, scaling up with the feed)
+    # lifecycle, so it takes the user-keyed drain sizing; its output is
+    # corpus-scale (one row per session), so past fixture scale the
+    # result must not live on the driver heap
+    parts, source_bytes = events_drain_sizing(m)
     return run_to_table(
         agg, "stream_session_stats", "complete",
-        state_partitions=max(4, events_state_partitions(m)),
-        # session output is corpus-scale (one row per session): past
-        # fixture scale the result must not live on the driver heap
-        source_bytes=events_source_bytes(m),
+        state_partitions=parts, source_bytes=source_bytes,
     )
 
 
@@ -561,8 +466,6 @@ def compaction_plan_stream(
     never touches the driver — each batch's recompute is written
     distributed (executor → sink), so sink size scales with the plan
     relation, not driver memory."""
-    import tempfile
-
     from ..catalog import load_model
     from ..registry import QUERIES
 

@@ -28,8 +28,8 @@ truth, unit-pinned in tests/test_streaming.py).
 
 Scale contract of the bucketing:
   * bucket count scales with the feed (``buckets`` argument; the
-    registered drains size it from ``auto_state_partitions``), so the
-    per-bucket user population — and therefore the state value a
+    registered drains size it from ``sizing.events_drain_sizing``), so
+    the per-bucket user population — and therefore the state value a
     micro-batch rewrites when ANY of its users is touched — stays
     bounded as the corpus grows;
   * the trade-off is explicit: a sparse micro-batch touching one user
@@ -52,14 +52,15 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..catalog import Model
+from ..functions.sizing import events_drain_sizing
 from ..registry import query
 
 OUTPUT_SCHEMA = "server string, first_ts bigint, event string"
 STATE_SCHEMA = "last_ts bigint, seen bigint"
 
 #: Bucket count for the registered user-keyed drains is
-#: ``_BUCKETS_PER_PARTITION x auto_state_partitions`` — enough buckets
-#: that every state partition runs tens of Python group calls (good
+#: ``_BUCKETS_PER_PARTITION`` x the drain's state partitions — enough
+#: buckets that every state partition runs tens of Python group calls (good
 #: worker utilisation, bounded per-bucket state) while keeping the
 #: per-bucket framework cost negligible.
 _BUCKETS_PER_PARTITION = 32
@@ -352,12 +353,7 @@ def stream_funnel_stage(m: Model) -> DataFrame:
     drain equals the batch funnel semantics, so the result is
     oracle-checkable.  Multi-batch/late-arrival behavior is pinned in
     tests/test_streaming.py."""
-    from .jobs import (
-        events_source_bytes,
-        events_state_partitions,
-        events_stream,
-        run_to_table,
-    )
+    from .jobs import events_stream, run_to_table
 
     ev = (
         events_stream(m.spark, m.sf_dir)
@@ -365,19 +361,15 @@ def stream_funnel_stage(m: Model) -> DataFrame:
         .select("user_id", "event_type", F.unix_micros("ts").alias("tus"))
     )
     # user-cardinality-linear state: parallelism = state partitions,
-    # sized to the feed (see auto_state_partitions — the round-9
-    # drain-scaling adjudication) with a floor of 4 (measured knee for
-    # the bucketed Python stage at sf0.1: 1.29 s @2 → 1.09 s @4 →
-    # 1.13 s @8, median-of-3 warm); bucket count scales with it so
-    # per-bucket state stays bounded as the feed grows.
-    parts = max(4, events_state_partitions(m))
+    # sized to the feed (functions/sizing.py); bucket count scales with
+    # it so per-bucket state stays bounded as the feed grows.  Per-user
+    # snapshots are a corpus-scale result, kept off-driver past fixture
+    # scale (see run_to_table).
+    parts, source_bytes = events_drain_sizing(m)
     return run_to_table(
         funnel_stages(ev, buckets=_BUCKETS_PER_PARTITION * parts),
         "stream_funnel_stage", "append",
-        state_partitions=parts,
-        # per-user snapshots: corpus-scale result, keep it off-driver
-        # past fixture scale (see run_to_table)
-        source_bytes=events_source_bytes(m),
+        state_partitions=parts, source_bytes=source_bytes,
     )
 
 
@@ -573,12 +565,7 @@ def stream_attribution(m: Model) -> DataFrame:
     multi-batch behavior is pinned in tests/test_streaming.py.  State
     is O(1) per user by construction — the design target the funnel
     state needed pruning to reach."""
-    from .jobs import (
-        events_source_bytes,
-        events_state_partitions,
-        events_stream,
-        run_to_table,
-    )
+    from .jobs import events_stream, run_to_table
 
     ev = (
         events_stream(m.spark, m.sf_dir)
@@ -590,12 +577,11 @@ def stream_attribution(m: Model) -> DataFrame:
             F.unix_micros("ts").alias("tus"),
         )
     )
-    parts = max(4, events_state_partitions(m))  # same measured knee as
-    drained = run_to_table(                     # the funnel drain
+    parts, source_bytes = events_drain_sizing(m)
+    drained = run_to_table(
         attribution_stream(ev, buckets=_BUCKETS_PER_PARTITION * parts),
         "stream_attribution", "append",
-        state_partitions=parts,
-        source_bytes=events_source_bytes(m),
+        state_partitions=parts, source_bytes=source_bytes,
     )
     return drained.groupBy("attributed_to").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_purchases")
